@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from youtube_analytics_lakehouse_databricks_spark.ops.maintenance import optimize_tables, zorder_rewrite
@@ -71,6 +72,92 @@ def test_optimize_tables_routes_zorder(spark):
         "silver.zopt_missing": "skipped_missing",
     }
     assert spark.table("silver.zopt_demo").count() == 1000
+
+
+def _write_demo(spark, fqn: str, n: int = 2000, mult: int = 7919) -> None:
+    spark.range(n, numPartitions=4).select(
+        (F.col("id") % 50).alias("a"),
+        ((F.col("id") * mult) % 50).alias("b"),
+        F.col("id").alias("payload"),
+    ).write.mode("overwrite").format("parquet").saveAsTable(fqn)
+
+
+def test_optimize_tables_concurrent_results_follow_fqns_order(spark):
+    spark.sql("CREATE DATABASE IF NOT EXISTS silver")
+    _write_demo(spark, "silver.ord_plain")
+    _write_demo(spark, "silver.ord_zorder")
+    spark.sql("CREATE OR REPLACE VIEW silver.ord_view AS SELECT 1 AS x")
+    fqns = ["silver.ord_zorder", "silver.ord_missing", "silver.ord_view", "silver.ord_plain"]
+    results = optimize_tables(spark, fqns, zorder_cols={"silver.ord_zorder": ["a", "b"]})
+    assert list(results.items()) == [
+        ("silver.ord_zorder", "optimized_zorder"),
+        ("silver.ord_missing", "skipped_missing"),
+        ("silver.ord_view", "skipped_view"),
+        ("silver.ord_plain", "optimized"),
+    ]
+
+
+def test_optimize_tables_failure_modes(spark):
+    """Lenient: a failing table records `error: ...` and every other table
+    is still optimized. Strict: the first failure in fqns order raises."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS silver")
+    names = ["silver.fm_plain", "silver.fm_bad1", "silver.fm_zorder", "silver.fm_bad2"]
+    for fqn in names:
+        _write_demo(spark, fqn)
+    zcols = {
+        "silver.fm_bad1": ["no_such_col_1"],
+        "silver.fm_zorder": ["a", "b"],
+        "silver.fm_bad2": ["no_such_col_2"],
+    }
+
+    results = optimize_tables(spark, names, zorder_cols=zcols)
+    assert list(results) == names
+    assert results["silver.fm_plain"] == "optimized"
+    assert results["silver.fm_zorder"] == "optimized_zorder"
+    assert results["silver.fm_bad1"].startswith("error: ")
+    assert "no_such_col_1" in results["silver.fm_bad1"]
+    assert results["silver.fm_bad2"].startswith("error: ")
+    for fqn in names:
+        assert spark.table(fqn).count() == 2000
+
+    with pytest.raises(Exception, match="no_such_col_1"):
+        optimize_tables(spark, names, strict=True, zorder_cols=zcols)
+
+
+def test_concurrent_zorder_matches_serial_layout(spark):
+    """Two tables ZORDERed together by optimize_tables end with the same
+    per-file (min, max) of their cluster columns as a serial zorder_rewrite
+    of each — the layout gold_serving reads depend on. RangePartitioner
+    seeds its sample from the RDD id, which concurrent jobs interleave, so
+    the tables hold at most 100 rows per output file (4 files, 400 rows):
+    then every range exchange samples all rows and the layout is a function
+    of the data alone."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS silver")
+    pairs = {"x": 7919, "y": 31}
+    for tag, mult in pairs.items():
+        for mode in ("conc", "serial"):
+            _write_demo(spark, f"silver.zl_{mode}_{tag}", n=400, mult=mult)
+
+    conc = {f"silver.zl_conc_{tag}": ["a", "b"] for tag in pairs}
+    assert optimize_tables(spark, list(conc), zorder_cols=conc) == {
+        fqn: "optimized_zorder" for fqn in conc
+    }
+    for tag in pairs:
+        zorder_rewrite(spark, f"silver.zl_serial_{tag}", ["a", "b"])
+
+    def layout(fqn):
+        rows = (
+            spark.table(fqn)
+            .groupBy(F.input_file_name())
+            .agg(F.min("a"), F.max("a"), F.min("b"), F.max("b"), F.count(F.lit(1)))
+            .collect()
+        )
+        return sorted(tuple(r[1:]) for r in rows)
+
+    for tag in pairs:
+        serial = layout(f"silver.zl_serial_{tag}")
+        assert len(serial) > 1
+        assert layout(f"silver.zl_conc_{tag}") == serial, tag
 
 
 def test_zorder_date_string_fact_shape(spark):

@@ -54,3 +54,44 @@ def test_warn_unknown_values(spark):
     res = q.warn_unknown_values(df, "source_id", ["YT_SEARCH"])
     assert res.severity == "warn"
     assert [r["source_id"] for r in res.violations.collect()] == ["WEIRD"]
+
+
+def test_run_checks_counts_each_check_once(spark):
+    """run_checks evaluates each check's violations exactly once (passed is
+    derived from that count) and reports in input order, for error and warn
+    checks alike, passing or failing."""
+    import threading
+    from collections import Counter
+
+    calls: Counter = Counter()
+    lock = threading.Lock()
+
+    class CountingCheck(q.CheckResult):
+        def count(self) -> int:
+            with lock:
+                calls[self.name] += 1
+            return super().count()
+
+    df = spark.createDataFrame([(1, None), (1, "x"), (2, "y")], "k int, v string")
+    built = [
+        q.unique_grain(df, ["k"], "k_unique"),  # error, fails
+        q.not_null(df, ["k"], "k_not_null"),  # error, passes
+        q.warn_unknown_values(df, "v", ["X"], "v_unknown"),  # warn, fails
+        q.warn_unknown_values(df, "v", ["X", "Y"], "v_known"),  # warn, passes
+        q.not_null(df, ["v"], "v_not_null"),  # error, fails
+    ]
+    checks = [CountingCheck(c.name, c.violations, c.severity) for c in built]
+
+    report = q.run_checks(checks)
+
+    assert list(report) == [c.name for c in checks]
+    assert calls == Counter({c.name: 1 for c in checks})
+    for c in built:
+        n = c.violations.count()
+        assert report[c.name] == {"count": n, "severity": c.severity, "passed": n == 0}
+    assert {(r["severity"], r["passed"]) for r in report.values()} == {
+        ("error", True),
+        ("error", False),
+        ("warn", True),
+        ("warn", False),
+    }

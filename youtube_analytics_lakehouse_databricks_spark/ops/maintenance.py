@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from youtube_analytics_lakehouse_databricks_spark import storage
+from youtube_analytics_lakehouse_databricks_spark.plans.registry import POOL_WORKERS, pool_map
 
 # Default OPTIMIZE ZORDER surface for the warehouse's gold fact tables:
 # cluster each on (date, dimension key) — the two predicate families
@@ -39,7 +40,13 @@ def optimize_tables(
     zorder_cols: dict[str, list[str]] | None = None,
 ) -> dict[str, str]:
     """Compact each table; skip non-tables; 'error'/'skipped'/'optimized'
-    per fqn, raising only in strict mode (optimize_tables.py:110-132).
+    per fqn (optimize_tables.py:110-132). Tables are independent, so they
+    are rewritten concurrently on the run's 4-thread pool (the one refresh
+    uses, plans.registry.pool_map); the result dict follows ``fqns`` order.
+    Lenient mode records ``error: ...`` for a failing table and keeps the
+    others. Strict mode lets every table finish, then raises the first
+    failure in ``fqns`` order — tables after it in the list may already
+    have been rewritten.
 
     Tables listed in ``zorder_cols`` get the ZORDER clustering rewrite
     (zorder_rewrite below) instead of plain compaction — the same opt-in
@@ -51,33 +58,33 @@ def optimize_tables(
     partitioning, or the next partitioned append fails with a layout
     mismatch. On Delta the whole body becomes `OPTIMIZE {fqn}` (metadata
     compaction, no rewrite-by-read needed)."""
-    results: dict[str, str] = {}
-    for fqn in fqns:
+
+    def optimize_one(fqn: str) -> str:
         try:
             if not spark.catalog.tableExists(fqn):
-                results[fqn] = "skipped_missing"
-                continue
+                return "skipped_missing"
             table = spark.catalog.getTable(fqn)
             if (table.tableType or "").upper() == "VIEW":
-                results[fqn] = "skipped_view"  # optimize_tables.py:91-94
-                continue
+                return "skipped_view"  # optimize_tables.py:91-94
             if zorder_cols and fqn in zorder_cols:
                 zorder_rewrite(spark, fqn, zorder_cols[fqn])
-                results[fqn] = "optimized_zorder"
-                continue
+                return "optimized_zorder"
             if storage.TABLE_FORMAT == "delta":
                 spark.sql(f"OPTIMIZE {fqn}")
-                results[fqn] = "optimized"
-                continue
+                return "optimized"
             df = spark.table(fqn)
             n = target_partitions or max(1, df.rdd.getNumPartitions() // 4)
             storage.swap_overwrite(spark, df.coalesce(n), fqn)
-            results[fqn] = "optimized"
+            return "optimized"
         except Exception as e:  # lenient mode records and continues
             if strict:
                 raise
-            results[fqn] = f"error: {e}"
-    return results
+            return f"error: {e}"
+
+    # A table listed twice would race two rewrites of itself (and of its
+    # swap staging table), so each distinct fqn is optimized once.
+    unique = list(dict.fromkeys(fqns))
+    return dict(zip(unique, pool_map(optimize_one, unique, POOL_WORKERS)))
 
 
 Z_BITS = 8  # bits per dimension in the interleaved key (256 range buckets)

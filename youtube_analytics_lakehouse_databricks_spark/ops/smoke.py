@@ -35,28 +35,31 @@ def smoke_checks(
     spark: SparkSession, max_lag_days: int = 7, today: str | None = None
 ) -> dict[str, dict]:
     report: dict[str, dict] = {}
-    missing = [t for t in REQUIRED_OBJECTS if not spark.catalog.tableExists(t)]
+    exists = {t: spark.catalog.tableExists(t) for t in dict.fromkeys(REQUIRED_OBJECTS + CORE_GOLD)}
+    missing = [t for t in REQUIRED_OBJECTS if not exists[t]]
     report["objects_exist"] = {"passed": not missing, "missing": missing}
 
     status = latest_run_status(spark)
     report["latest_run_success"] = {"passed": status == "success", "status": status}
 
-    counts = {t: spark.table(t).count() for t in CORE_GOLD if spark.catalog.tableExists(t)}
+    # Row count and recency lag of each core gold table in one aggregate.
+    today_col = F.to_date(F.lit(today)) if today else F.current_date()
+    counts, lags = {}, {}
+    for t in CORE_GOLD:
+        if exists[t]:
+            row = (
+                spark.table(t)
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.datediff(today_col, F.max("date")).alias("lag"),
+                )
+                .collect()[0]
+            )
+            counts[t], lags[t] = row["n"], row["lag"]
     report["core_gold_nonempty"] = {
         "passed": bool(counts) and all(c > 0 for c in counts.values()),
         "counts": counts,
     }
-
-    lags = {}
-    today_col = F.to_date(F.lit(today)) if today else F.current_date()
-    for t in CORE_GOLD:
-        if spark.catalog.tableExists(t):
-            row = (
-                spark.table(t)
-                .agg(F.datediff(today_col, F.max("date")).alias("lag"))
-                .collect()[0]
-            )
-            lags[t] = row["lag"]
     report["gold_recency"] = {
         "passed": bool(lags) and all(lag is not None and lag <= max_lag_days for lag in lags.values()),
         "lags": lags,

@@ -16,11 +16,26 @@ date-pruned reads skip files.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Width of every thread pool a run submits Spark actions from: refresh
+# levels, the quality checks and the OPTIMIZE pass — parity with the
+# reference's dbt `threads: 4` (dbt/profiles.yml:12).
+POOL_WORKERS = 4
+
+
+def pool_map(fn: Callable, items: Iterable, max_workers: int) -> list:
+    """``fn`` over ``items`` on a thread pool; Spark's scheduler interleaves
+    the jobs the calls submit. Results come back in input order. Every call
+    runs to completion; if any raised, the first exception in input order
+    is re-raised after the pool has drained."""
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        return list(pool.map(fn, items))
 
 
 @dataclass(frozen=True)
@@ -62,28 +77,23 @@ class PipelineGraph:
 
     def _run_levels(self, fn, wanted: set[str], max_workers: int) -> list:
         """Walk the dependency graph level by level, running ``fn(view)``
-        for same-depth views concurrently on a thread pool (Spark's
-        scheduler interleaves the submitted jobs) — parity with the
-        reference's dbt `threads: 4` (dbt/profiles.yml:12). Each level is
-        a barrier, so a view never builds before its deps are written.
+        for same-depth views concurrently (pool_map). Each level is a
+        barrier, so a view never builds before its deps are written.
         Returns fn results in deterministic (level, registration) order."""
-        from concurrent.futures import ThreadPoolExecutor
-
         graph = {n: set(self.views[n].deps) & wanted for n in self.views if n in wanted}
         ts = TopologicalSorter(graph)
         ts.prepare()
         reg_order = {n: i for i, n in enumerate(self.views)}
         results: list = []
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            while ts.is_active():
-                level = sorted(ts.get_ready(), key=reg_order.__getitem__)
-                results.extend(pool.map(lambda n: fn(self.views[n]), level))
-                for name in level:
-                    ts.done(name)
+        while ts.is_active():
+            level = sorted(ts.get_ready(), key=reg_order.__getitem__)
+            results.extend(pool_map(lambda n: fn(self.views[n]), level, max_workers))
+            for name in level:
+                ts.done(name)
         return results
 
     def refresh(
-        self, spark: SparkSession, only: set[str] | None = None, max_workers: int = 4
+        self, spark: SparkSession, only: set[str] | None = None, max_workers: int = POOL_WORKERS
     ) -> list[str]:
         """Full refresh in dependency order; returns refreshed FQNs.
         Same-depth views refresh concurrently (see _run_levels). ``only``
@@ -100,7 +110,9 @@ class PipelineGraph:
 
         return self._run_levels(_write, wanted, max_workers)
 
-    def refresh_incremental(self, spark: SparkSession, max_workers: int = 4) -> dict[str, str]:
+    def refresh_incremental(
+        self, spark: SparkSession, max_workers: int = POOL_WORKERS
+    ) -> dict[str, str]:
         """Incremental refresh: views with merge support process only
         bronze envelopes newer than their stored watermark and merge into
         the existing table (union + latest-wins + swap — the same math as

@@ -5,9 +5,13 @@ singular tests) wrapped in a CheckResult; a test run asserts every
 non-warn check is empty (reference: dbt/models/schema.yml:18-126 schema
 tests; dbt/tests/*.sql singular tests).
 
-Checks are lazily-planned DataFrames — a full `run_checks` over a mart
-issues one job per check; at scale, violations counts ride the same
-Catalyst plans as the models themselves (count() with pushdown).
+Checks are lazily-planned DataFrames. `run_checks` counts each check's
+violations exactly once — `passed` is derived from that count — and
+evaluates the checks concurrently on the run's 4-thread pool (the one
+refresh uses, plans.registry.pool_map), so Spark interleaves the per-check
+jobs instead of running them one at a time. At scale, violations counts
+ride the same Catalyst plans as the models themselves (count() with
+pushdown).
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from youtube_analytics_lakehouse_databricks_spark.plans.registry import POOL_WORKERS, pool_map
 
 
 @dataclass
@@ -111,8 +117,10 @@ def warn_unknown_values(
 
 
 def run_checks(checks: list[CheckResult]) -> dict[str, dict]:
-    """Evaluate all checks; returns {name: {count, severity, passed}}."""
+    """Evaluate all checks, each counted once, concurrently; returns
+    {name: {count, severity, passed}} in input order."""
+    counts = pool_map(lambda c: c.count(), checks, POOL_WORKERS)
     return {
-        c.name: {"count": c.count(), "severity": c.severity, "passed": c.passed()}
-        for c in checks
+        c.name: {"count": n, "severity": c.severity, "passed": n == 0}
+        for c, n in zip(checks, counts)
     }
